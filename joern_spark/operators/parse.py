@@ -7,11 +7,11 @@ axis: each Arrow batch of (repo, path, commit, lang, content) rows is parsed
 in-process; per-file failures degrade to a single ``parse_error`` row instead
 of failing the task (at 10^12-file scale some files WILL be pathological).
 
-When ``fuse_intraprocedural`` is on (default), the CFG / dominator / CDG /
-reaching-def kernels run inside the same stage on the just-built AST — the
-per-method passes of the reference (CfgCreationPass, CfgDominatorPass,
-CdgPass, ReachingDefPass) collapse into the parse stage with ZERO extra
-shuffle, because method locality ⊂ file locality.
+The CFG / dominator / CDG / reaching-def kernels always run inside the same
+stage on the just-built AST — the per-method passes of the reference
+(CfgCreationPass, CfgDominatorPass, CdgPass, ReachingDefPass) collapse into
+the parse stage with ZERO extra shuffle, because method locality ⊂ file
+locality.
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ RAW_COLS = [f.name for f in M.RAW_NODE_SCHEMA.fields]
 
 
 def _parse_one(repo: str, path: str, commit: str, lang: str, content: str,
-               sha: str, fuse: bool) -> list[dict]:
+               sha: str) -> list[dict]:
     from joern_spark.frontends.astnode import flatten_file, parse_error_row
 
     try:
@@ -44,8 +44,7 @@ def _parse_one(repo: str, path: str, commit: str, lang: str, content: str,
         else:
             return [parse_error_row(repo, path, commit, lang, content, f"unsupported lang: {lang}")]
         rows = flatten_file(repo, path, commit, lang, content, roots, sha=sha)
-        if fuse and rows:
-            _fuse_intra_edges(rows)
+        _fuse_intra_edges(rows)
         return rows
     except RecursionError:
         return [parse_error_row(repo, path, commit, lang, content, "recursion limit")]
@@ -93,7 +92,7 @@ def _fuse_intra_edges(rows: list[dict]) -> None:
         m["ie_src"], m["ie_dst"], m["ie_label"], m["ie_var"] = srcs, dsts, labels, variables
 
 
-def parse_source(source: DataFrame, fuse_intraprocedural: bool = True) -> DataFrame:
+def parse_source(source: DataFrame) -> DataFrame:
     """source(repo,path,commit,lang,content) → raw node rows.
 
     The sha256 lineage column is computed JVM-side (F.sha2) and carried
@@ -107,7 +106,7 @@ def parse_source(source: DataFrame, fuse_intraprocedural: bool = True) -> DataFr
             out: list[dict] = []
             for t in pdf.itertuples(index=False):
                 out.extend(_parse_one(t.repo, t.path, t.commit, t.lang,
-                                      t.content, t.sha256, fuse_intraprocedural))
+                                      t.content, t.sha256))
             if out:
                 yield pd.DataFrame(out, columns=RAW_COLS)
 

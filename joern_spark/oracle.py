@@ -31,7 +31,7 @@ def local_files() -> list[tuple[str, str, str, str, list[dict]]]:
     out = []
     for repo, path, commit, lang, content in fixture_rows():
         sha = hashlib.sha256(content.encode()).hexdigest()
-        rows = _parse_one(repo, path, commit, lang, content, sha, True)
+        rows = _parse_one(repo, path, commit, lang, content, sha)
         assert not any(r["parse_error"] for r in rows), (path, rows[0]["parse_error"])
         out.append((repo, path, commit, lang, rows))
     return out

@@ -422,6 +422,17 @@ def spark_facts(spark: SparkSession) -> DataFrame:
         .select("lang", "kase", F.lit("membercode").alias("relation"),
                 F.concat_ws(".", F.col("td_name"), F.col("name")).alias("subj"),
                 F.col("code").alias("obj")))
+    # TYPE_DECL CODE spelling ("class Local") and its AST parent fullName
+    # (namespaceBlock.typeDecl traversal)
+    tds = base.filter(F.col("kind") == M.TYPE_DECL)
+    out.append(
+        tds.select("lang", "kase", F.lit("tdcode").alias("relation"),
+                   F.col("name").alias("subj"), F.col("code").alias("obj")))
+    out.append(
+        tds.filter(F.col("ast_parent_full_name") != "")
+        .select("lang", "kase", F.lit("tdowner").alias("relation"),
+                F.col("name").alias("subj"),
+                F.col("ast_parent_full_name").alias("obj")))
 
     out.append(_binding_facts(base))
 

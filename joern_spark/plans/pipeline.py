@@ -3,12 +3,14 @@ and idempotent resume.
 
 Stage order mirrors the reference overlay order (X2Cpg.scala:374-388 →
 DefaultOverlays.scala:18-25): parse (AST + fused intraprocedural passes) →
-base linking → call graph. Every stage is a pure DataFrame→DataFrame
-function; a checkpointed stage writes partitioned parquet plus a
-``_manifest.json`` (stage name, row count, input fingerprint, wall time) and
-a re-run with the same fingerprint short-circuits to a read — the analogue of
-the reference's frontend↔console file handoff (CpgGenerator.scala:28-48),
-which is exactly a resume boundary.
+base linking → bindings → call graph → entity linking. Every build takes one
+path: each stage — ``nodes`` (parse output), ``extras`` (the nodes linking
+adds), ``canonical`` (the entity-linking map) and the edge halves
+``edges_rest`` / ``edges_call`` — is parquet plus a ``_manifest.json``
+(stage, row count, input fingerprint, wall time), the analogue of the
+reference's frontend↔console file handoff (CpgGenerator.scala:28-48). A
+caller's ``out_dir`` resumes each stage whose manifest matches the input
+fingerprint; an ad-hoc build writes to a fresh scratch dir and never resumes.
 """
 
 from __future__ import annotations
@@ -16,6 +18,7 @@ from __future__ import annotations
 import json
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -55,47 +58,43 @@ def _adhoc_scratch_dir() -> str:
     return d
 
 
-def _write_stage(df: DataFrame, out_dir: str, stage: str, fingerprint: str,
-                 partition_by: list[str] | None = None) -> DataFrame:
-    from pyspark.sql import Observation
+def _fresh(out_dir: str, stage: str, fingerprint: str | None) -> bool:
+    """True when the stage's manifest matches ``fingerprint``. A scratch-dir
+    build has no fingerprint, so its stages never resume."""
+    mp = _manifest_path(out_dir, stage)
+    if fingerprint is None or not os.path.exists(mp):
+        return False
+    with open(mp) as f:
+        return json.load(f).get("fingerprint") == fingerprint
+
+
+def _stage(spark: SparkSession, out_dir: str, stage: str,
+           fingerprint: str | None, make) -> DataFrame:
+    """The one stage boundary: resume ``stage`` from its parquet, or write
+    ``make()`` there and read it back. The manifest, written last, is the
+    commit marker, so the writer's ``_SUCCESS`` file is left out. No
+    ``partitionBy``: dynamic partition writes sort the wide rows per task
+    (+40% on the parse write of the bench corpus); lang-filtered consumers
+    skip row groups via parquet stats instead."""
     path = os.path.join(out_dir, stage)
+    if _fresh(out_dir, stage, fingerprint):
+        return spark.read.parquet(path)
+    from pyspark.sql import Observation
     t0 = time.time()
+    df = make()
     # manifest row count rides the write job via observe() — no second
     # count job over the freshly written parquet
     obs = Observation(f"rows_{stage}")
-    w = df.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode("overwrite")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
-    rows = obs.get["rows"]
-    spark = df.sparkSession
-    out = spark.read.parquet(path)
+    (df.observe(obs, F.count(F.lit(1)).alias("rows"))
+     .write.mode("overwrite")
+     .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+     .parquet(path))
     with open(_manifest_path(out_dir, stage), "w") as f:
-        json.dump({"stage": stage, "fingerprint": fingerprint, "rows": rows,
+        json.dump({"stage": stage, "fingerprint": fingerprint,
+                   "rows": obs.get["rows"],
                    "wall_sec": round(time.time() - t0, 3)}, f)
-    return out
-
-
-def _resume(spark: SparkSession, out_dir: str, stage: str, fingerprint: str) -> DataFrame | None:
-    mp = _manifest_path(out_dir, stage)
-    if os.path.exists(mp):
-        with open(mp) as f:
-            m = json.load(f)
-        if m.get("fingerprint") == fingerprint:
-            return spark.read.parquet(os.path.join(out_dir, stage))
-    return None
-
-
-def _canonicalize(dim_full: DataFrame, call_edges: DataFrame):
-    """Stage 3b — entity linking / canonicalization (north rule): unresolved
-    stub symbols alias-paired to compatible internal definitions, collapsed
-    via large-star/small-star connected components; CALL edges rewritten
-    through the canonical map. One eager checkpoint materializes the (tiny)
-    map for both the rewrite broadcast and the sink's canonical table."""
-    from joern_spark.operators.linking import (canonical_symbol_map,
-                                               canonicalize_call_edges)
-    canonical = canonical_symbol_map(dim_full).localCheckpoint(eager=True)
-    return canonical, canonicalize_call_edges(call_edges, canonical)
+    # read back with the schema just written: no schema-inference job
+    return spark.read.schema(df.schema).parquet(path)
 
 
 def source_fingerprint(source: DataFrame) -> str:
@@ -109,10 +108,20 @@ def source_fingerprint(source: DataFrame) -> str:
     return f"{h['s']}:{h['c']}"
 
 
+# Stages after parse; the edge halves keep their write-target names
+# (edges_rest, edges_call) so per-layer tracing can attribute the writes.
+_LINK_STAGES = ("extras", "canonical", "edges_rest", "edges_call")
+
+
 def build_cpg(spark: SparkSession, source: DataFrame, out_dir: str | None = None,
-              fuse_intraprocedural: bool = True, run_callgraph: bool = True,
               fingerprint: str | None = None) -> dict[str, DataFrame]:
-    """source(repo,path,commit,lang,content) → {nodes, edges, errors}."""
+    """source(repo,path,commit,lang,content) →
+    {nodes, edges, errors, canonical, timings}.
+
+    Every build is a checkpointed build. With ``out_dir`` each stage resumes
+    when its manifest matches the input fingerprint (``fingerprint``, else
+    one computed from ``source``); without it the stages go to a fresh
+    scratch dir and nothing resumes."""
     # The edges stage is a wide union of operator branches; its rendered
     # explain string runs to hundreds of MB, and AQE re-renders it on every
     # plan update (AdaptiveSparkPlanExec.onUpdatePlan) — on a default-heap
@@ -120,59 +129,42 @@ def build_cpg(spark: SparkSession, source: DataFrame, out_dir: str | None = None
     # caller hands us (runtime-settable SQL conf; explain output truncates
     # with a notice instead of materializing the full tree).
     spark.conf.set("spark.sql.maxPlanStringLength", "100000")
-    fp = fingerprint
     if out_dir:
         os.makedirs(out_dir, exist_ok=True)
-        fp = fp or source_fingerprint(source)
-        # full resume: all stage checkpoints match the input fingerprint →
-        # no plan construction at all (the iterative closure loop is eager)
-        done_nodes = _resume(spark, out_dir, "nodes", fp)
-        done_all = _resume(spark, out_dir, "all_nodes", fp)
-        done_edges = _resume(spark, out_dir, "edges", fp)
-        if done_nodes is not None and done_all is not None and done_edges is not None:
-            # the canonical map persists as its own fingerprinted stage, so a
-            # clean resume restores the entity-linking output too (a resumed
-            # build followed by write_graph_tables must not lose it)
-            return {"nodes": done_all, "edges": done_edges,
-                    "errors": done_nodes.filter(F.col("parse_error") != ""),
-                    "canonical": _resume(spark, out_dir, "canonical", fp)}
+        fp = fingerprint or source_fingerprint(source)
+    else:
+        out_dir, fp = _adhoc_scratch_dir(), None
 
     # ---- stage 1: parse (+ fused per-method passes) -------------------------
-    # The parse output is ALWAYS checkpointed to parquet, even for ad-hoc
-    # (out_dir=None) runs: a dozen downstream branches (base passes, edge
-    # derivation, four call linkers, final counts) each scan it, and a cached
-    # in-memory copy of the wide rows (ie_* arrays) both risks eviction →
-    # silent Python re-parse and defeats column pruning. A parquet stage
-    # boundary gives every consumer a pruned columnar scan — the same reason
-    # the reference hands off cpg.bin between frontend and console
-    # (CpgGenerator.scala:28-48).
-    nodes = None
-    if out_dir:
-        nodes = _resume(spark, out_dir, "nodes", fp)
-    else:
-        out_dir_adhoc = _adhoc_scratch_dir()
-    timings: dict[str, float] = {}
+    # A stage of its own: a dozen downstream branches (base passes, edge
+    # derivation, four call linkers) each scan it, and a cached in-memory
+    # copy of the wide rows (ie_* arrays) both risks eviction → silent Python
+    # re-parse and defeats column pruning. A parquet boundary gives every
+    # consumer a pruned columnar scan — the same reason the reference hands
+    # off cpg.bin between frontend and console (CpgGenerator.scala:28-48).
     t_parse = time.time()
-    if nodes is None:
-        raw = parse_source(source, fuse_intraprocedural=fuse_intraprocedural)
-        nodes = with_ids(raw)
-        if out_dir:
-            nodes = _write_stage(nodes, out_dir, "nodes", fp, partition_by=["lang"])
-        else:
-            # NO partitionBy here: dynamic partition writes sort the wide
-            # parse rows per task, inflating the parse+write stage ~40% on
-            # the bench corpus; lang-filtered consumers instead skip via
-            # parquet row-group stats (each row group is single-language in
-            # practice) plus the explicit has_js gate below
-            path = os.path.join(out_dir_adhoc, "nodes")
-            nodes.write.mode("overwrite").parquet(path)
-            nodes = spark.read.parquet(path)
-    timings["parse_extract_sec"] = round(time.time() - t_parse, 3)
+    nodes = _stage(spark, out_dir, "nodes", fp,
+                   lambda: with_ids(parse_source(source)))
     t_link = time.time()
-
-    errors = nodes.filter(F.col("parse_error") != "")
     ok = nodes.filter(F.col("parse_error") == "")
 
+    # Plan construction runs eager jobs (probes, the inheritance closure
+    # loop, checkpoints), so a resume whose later stages all match skips it.
+    plans = (None if all(_fresh(out_dir, s, fp) for s in _LINK_STAGES)
+             else _link_plans(spark, ok))
+    extras, canonical, edges = _materialize(spark, out_dir, fp, plans)
+    return {"nodes": ok.unionByName(extras), "edges": edges,
+            "errors": nodes.filter(F.col("parse_error") != ""),
+            "canonical": canonical,
+            "timings": {"parse_extract_sec": round(t_link - t_parse, 3),
+                        "link_materialize_sec": round(time.time() - t_link, 3)}}
+
+
+def _link_plans(spark: SparkSession, ok: DataFrame) -> dict[str, DataFrame]:
+    """Plans of the stages after parse, over the error-free parse rows:
+    ``extras`` (the nodes linking adds: external stubs and binding nodes),
+    ``rest`` (every edge but CALL), ``dim`` (the full method dimension) and
+    ``calls`` (CALL edges before canonicalization)."""
     # ---- shared dimensions (one pruned scan each, persisted) ----------------
     # Every base pass and call linker works off these small relations; the
     # big node table is only re-read by the genuinely row-producing edge
@@ -232,79 +224,48 @@ def build_cpg(spark: SparkSession, source: DataFrame, out_dir: str | None = None
     bind_nodes, bind_edges = binding_nodes_and_edges(all_nodes, rel=bind_rel)
     all_nodes = all_nodes.unionByName(bind_nodes)
 
-    # ---- stage 3: edges ------------------------------------------------------
-    edges = derived_edges(ok).unionByName(base_edges).unionByName(bind_edges)
-    canonical = None
-    call_edges = None
-    if run_callgraph:
-        linked = CG.run_callgraph(all_nodes, call_sites=call_sites,
-                                  dim=dim_full, rewrites=rewrites,
-                                  closure=closure, bindings=bind_rel)
-        # CALL edges stay a separate relation until after canonicalization;
-        # everything else (the bulk of the volume) is independent of the
-        # entity-linking stage and can materialize concurrently with it.
-        call_edges = linked.filter(F.col("label") == M.CALL_EDGE)
-        edges = edges.unionByName(
-            linked.filter(F.col("label") != M.CALL_EDGE))
+    # ---- stage 3: call graph -------------------------------------------------
+    linked = CG.run_callgraph(all_nodes, call_sites=call_sites,
+                              dim=dim_full, rewrites=rewrites,
+                              closure=closure, bindings=bind_rel)
+    # CALL edges stay a separate relation until after canonicalization;
+    # everything else (the bulk of the volume) is independent of the
+    # entity-linking stage and can materialize concurrently with it.
+    rest = (derived_edges(ok).unionByName(base_edges).unionByName(bind_edges)
+            .unionByName(linked.filter(F.col("label") != M.CALL_EDGE)))
+    return {"extras": extra_nodes.unionByName(bind_nodes), "rest": rest,
+            "dim": dim_full, "calls": linked.filter(F.col("label") == M.CALL_EDGE)}
 
-    if out_dir:
-        all_nodes_out = _resume(spark, out_dir, "all_nodes", fp)
-        edges_out = _resume(spark, out_dir, "edges", fp)
-        if all_nodes_out is None:
-            all_nodes_out = _write_stage(all_nodes, out_dir, "all_nodes", fp, partition_by=["lang"])
-        if edges_out is None:
-            if run_callgraph:
-                canonical, call_edges = _canonicalize(dim_full, call_edges)
-                canonical = _write_stage(canonical, out_dir, "canonical", fp)
-                edges = edges.unionByName(call_edges)
-            edges_out = _write_stage(edges, out_dir, "edges", fp, partition_by=["label"])
-        elif run_callgraph:
-            # edges resumed: reload (or, for pre-existing checkpoints that
-            # lack the stage, recompute — dimension-only, cheap) so the
-            # canonical table survives a checkpointed resume
-            canonical = _resume(spark, out_dir, "canonical", fp)
-            if canonical is None:
-                canonical, _ = _canonicalize(dim_full, call_edges)
-                canonical = _write_stage(canonical, out_dir, "canonical", fp)
-        all_nodes, edges = all_nodes_out, edges_out
-    else:
-        # callers typically run several queries over the result — materialize
-        # the final edge relation as parquet on tmpfs rather than a
-        # deserialized in-memory cache: caching tens of millions of edge
-        # objects is GC-bound and does not scale with cores, while a columnar
-        # write parallelizes and every later query gets a pruned scan.
-        # The non-CALL bulk (AST/CFG/CONTAINS/... — ~95% of edge volume)
-        # writes on a worker thread WHILE the entity-linking stage builds the
-        # canonical map on the main thread: two independent DAG branches that
-        # would otherwise serialize driver-side. all_nodes = parquet parse
-        # output ∪ small cached extras — cheap to recompute, not re-written.
-        import threading
-        epath_rest = os.path.join(out_dir_adhoc, "edges_rest")
-        epath_call = os.path.join(out_dir_adhoc, "edges_call")
-        write_err: list[BaseException] = []
 
-        def _write_rest():
-            try:
-                edges.write.mode("overwrite").parquet(epath_rest)
-            except BaseException as ex:  # surfaced after join()
-                write_err.append(ex)
-
-        th = threading.Thread(target=_write_rest, name="edges_rest_writer")
-        th.start()
-        try:
-            if run_callgraph:
-                canonical, call_edges = _canonicalize(dim_full, call_edges)
-                call_edges.write.mode("overwrite").parquet(epath_call)
-        finally:
-            th.join()
-        if write_err:
-            raise write_err[0]
-        paths = [epath_rest] + ([epath_call] if run_callgraph else [])
-        edges = spark.read.parquet(*paths)
-
-    timings["link_materialize_sec"] = round(time.time() - t_link, 3)
-    return {"nodes": all_nodes, "edges": edges, "errors": errors,
-            "canonical": canonical, "timings": timings}
+def _materialize(spark: SparkSession, out_dir: str, fingerprint: str | None,
+                 plans: dict[str, DataFrame] | None):
+    """The end of every build → (extras, canonical, edges), each read back
+    from its stage. The non-CALL edges (~95% of edge volume) write on a
+    worker thread WHILE the main thread runs entity linking (stage 3b: stub
+    symbols alias-paired to internal definitions, collapsed by connected
+    components into the canonical map, CALL edges rewritten through it) and
+    then writes the linked nodes — two independent DAG branches that would
+    otherwise serialize driver-side. Parquet, not an in-memory cache:
+    caching edge objects is GC-bound and does not scale with cores, while a
+    columnar write parallelizes and every later query gets a pruned scan."""
+    from joern_spark.operators.linking import (canonical_symbol_map,
+                                               canonicalize_call_edges)
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        rest = pool.submit(_stage, spark, out_dir, "edges_rest", fingerprint,
+                           lambda: plans["rest"])
+        canonical = _stage(spark, out_dir, "canonical", fingerprint,
+                           lambda: canonical_symbol_map(plans["dim"]))
+        calls = _stage(spark, out_dir, "edges_call", fingerprint,
+                       lambda: canonicalize_call_edges(plans["calls"], canonical))
+        # One file: extras are ~5% of the parse rows (stubs, per-file and
+        # per-parameter nodes), and per-file parquet overhead (footer, column
+        # chunk headers, checksum file) makes up over half of a 4-file
+        # extras stage on the bench corpus. Written last, when the linking
+        # jobs above have filled run_base's persisted extra_nodes, so the one
+        # task only copies cached rows.
+        extras = _stage(spark, out_dir, "extras", fingerprint,
+                        lambda: plans["extras"].coalesce(1))
+        return extras, canonical, rest.result().unionByName(calls)
 
 
 # --------------------------------------------------------------------------- #

@@ -1,7 +1,8 @@
 """Resume idempotence (BASELINE.md target row): a rebuild from checkpointed
 stage boundaries yields byte-identical triples — full resume (all manifests
 match), partial resume (link stages recomputed from the parse checkpoint),
-and a fingerprint change forcing a real rebuild."""
+an ad-hoc build (scratch dir, no resume) equal to the checkpointed one, and
+a fingerprint change forcing a real rebuild."""
 
 from __future__ import annotations
 
@@ -33,6 +34,9 @@ def _nodes_sig(out):
     return (r["c"], r["h"])
 
 
+LINK_STAGES = ("extras", "canonical", "edges_rest", "edges_call")
+
+
 def test_resume_idempotent(spark, tmp_path_factory):
     from joern_spark.corpus import fixture_source
     from joern_spark.plans.pipeline import build_cpg
@@ -46,7 +50,7 @@ def test_resume_idempotent(spark, tmp_path_factory):
 
     # 1. full resume: every stage manifest matches -> pure parquet reads
     mtimes = {s: os.path.getmtime(os.path.join(d, s, "_manifest.json"))
-              for s in ("nodes", "all_nodes", "edges")}
+              for s in ("nodes",) + LINK_STAGES}
     out2 = build_cpg(spark, src, out_dir=d)
     assert _triples(out2) == t1
     assert _nodes_sig(out2) == n1
@@ -56,15 +60,24 @@ def test_resume_idempotent(spark, tmp_path_factory):
 
     # 2. partial resume: drop the link-stage manifests, keep the parse
     # checkpoint -> linking recomputes from the nodes parquet, same triples
-    for s in ("all_nodes", "edges"):
+    for s in LINK_STAGES:
         os.remove(os.path.join(d, s, "_manifest.json"))
     out3 = build_cpg(spark, src, out_dir=d)
     assert _triples(out3) == t1
     assert _nodes_sig(out3) == n1
 
     # 3. manifest rows stay truthful across resume paths
-    with open(os.path.join(d, "edges", "_manifest.json")) as f:
-        assert json.load(f)["rows"] == len(t1)
+    rows = 0
+    for s in ("edges_rest", "edges_call"):
+        with open(os.path.join(d, s, "_manifest.json")) as f:
+            rows += json.load(f)["rows"]
+    assert rows == len(t1)
+
+    # 3b. an ad-hoc build (scratch dir, never resumed) builds the same graph
+    out0 = build_cpg(spark, src, out_dir=None)
+    assert _triples(out0) == t1
+    assert _nodes_sig(out0) == n1
+    assert out0.keys() == out1.keys() == out2.keys() == out3.keys()
 
     # 4. input change -> fingerprint mismatch -> stale checkpoints ignored
     extra = spark.createDataFrame(
